@@ -5,8 +5,10 @@ composable DataFrame transforms. Each has a DuckDB-oracle twin in
 Scale notes (100 TB):
 * aggregations here are all partial-agg friendly (sum/count/min/max/percentile
   → Spark plans map-side combine automatically);
-* the N50 window needs a global ordering — exact mode is for report scale;
-  callers at 10^12 rows use the two-pass quantile variant (``n50_approx``);
+* the N50 window needs a global ordering — exact mode is for small tables;
+  callers at 10^12 rows use the two-pass quantile variant (``n50_approx``).
+  The summary report (``report.summarize``) uses neither: it walks the
+  exact (length → count) rows its one grouped aggregation already collects;
 * joins against small dimension/control tables broadcast explicitly
   (reference analog: control-read anti-join ``lq_coverage.py:104-107``).
 """

@@ -3,22 +3,27 @@ cascade → JSON (+ optional HTML).
 
 Transplants LongQC's aggregate/model/decision/report phases (reference
 ``longQC.py:449-517`` aggregates, ``462-686`` JSON dict, ``787-824`` warn/
-error cascade, ``826-831`` jinja2 HTML). All heavy computation is ONE Spark
-aggregation pass + three ≤100-row collected histograms; fits run on
-sufficient statistics or a bounded hash-priority sample — nothing large ever
-reaches the driver.
+error cascade, ``826-831`` jinja2 HTML).
+
+``summarize`` reads the labels twice: one grouped aggregation (grouping sets
+over a column-pruned projection; two Spark jobs under adaptive execution, a
+shuffle-map job and a result job) and one ``limit``-bounded hash-priority
+perplexity sample (one job). The aggregation collects 1 + distinct langs +
+distinct ``n_words`` + ≤ 40 perplexity bins + distinct reasons rows to the
+driver, so its size grows with the longest document, not with the document
+count; fits run on those rows (sufficient statistics) or on the sample.
 """
 
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
 from .config import DEFAULT_CONFIG, QCConfig
 from .fits import gamma_mle, gmm_1d
-from .operators.relational import histogram, n50_approx
 
 # decision thresholds — the Q7-fraction warn/error analog
 # (reference longQC.py:141-143: warn 0.65 / error 0.5)
@@ -28,64 +33,122 @@ PII_RATE_WARN = 0.3
 LANG_MISMATCH_WARN = 0.3
 
 
+# grouping_id() of each grouping set over _GROUP_COLS: bit (3 - i) is set
+# when column i is rolled up, so the grand total is 0b1111 and a set that
+# groups only column i clears that one bit.
+_GROUP_COLS = ("lang_pred", "n_words", "ppl_bin", "reason")
+_GID_TOTAL = 0b1111
+_SET_OF_GID = {_GID_TOTAL ^ (1 << (3 - i)): c for i, c in enumerate(_GROUP_COLS)}
+
+_LEN_BIN_WIDTH = 50
+_PPL_BIN_WIDTH = 500.0
+_PPL_HIST_CAP = 20000
+
+
+def _nxx(words_desc: list[tuple[int, int]], total: int | None, frac: float) -> int | None:
+    """Exact NXX from (length, count) rows sorted by length descending: the
+    smallest length whose running length-weighted sum reaches frac·total
+    (the ``nxx`` window walk, one step per distinct length); None for no
+    rows."""
+    cum = 0
+    for w, c in words_desc:
+        cum += w * c
+        if cum >= total * frac:
+            return w
+
+
+def _ordered(counts: dict, first: tuple = ()) -> dict:
+    """Keys in ``first`` order, then the rest sorted, a None key last."""
+    rest = sorted(k for k in counts if k is not None and k not in first)
+    keys = [k for k in first if k in counts] + rest + ([None] if None in counts else [])
+    return {k: counts[k] for k in keys}
+
+
 def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int = 10_000) -> dict[str, Any]:
-    """labels (qc_pipeline output) → nested summary dict (JSON-ready)."""
-    agg = labels.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_if(F.col("keep")).alias("n_keep"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("n_words").alias("total_words"),
-        F.max("n_words").alias("longest_doc_words"),
-        F.avg("n_words").alias("mean_words"),
-        F.avg("mean_word_len").alias("mean_word_len"),
-        F.avg("symbol_char_frac").alias("mean_symbol_frac"),
-        F.avg("dup_line_frac").alias("mean_dup_line_frac"),
-        F.avg("perplexity").alias("mean_perplexity"),
-        F.expr("percentile(perplexity, 0.5)").alias("median_perplexity"),
-        F.sum("pii_match_count").alias("total_pii_matches"),
-        F.count_if(F.col("pii_match_count") > 0).alias("n_docs_with_pii"),
-        F.sum("tox_match_count").alias("total_tox_matches"),
-        # sufficient stats for the gamma fit (Minka needs mean + mean-log)
-        F.avg(F.when(F.col("n_words") > 0, F.col("n_words"))).alias("len_mean"),
-        F.avg(F.when(F.col("n_words") > 0, F.log("n_words"))).alias("len_meanlog"),
-    ).collect()[0]
+    """labels (qc_pipeline output) → nested summary dict (JSON-ready).
 
-    n_docs = agg["n_docs"] or 0
-    n_keep = agg["n_keep"] or 0
+    One grouped aggregation computes every aggregate; a second bounded job
+    draws the perplexity sample. ``reasons`` follow ``cfg.rule_names`` with
+    unknown reasons sorted after them, ``langs`` are sorted and histogram
+    bins ascend, so the same labels always render the same report."""
+    per_reason = labels.select(
+        "keep",
+        "n_chars",
+        "n_words",
+        "mean_word_len",
+        "symbol_char_frac",
+        "dup_line_frac",
+        "perplexity",
+        "pii_match_count",
+        "tox_match_count",
+        "lang_pred",
+        F.when(
+            F.col("perplexity") < _PPL_HIST_CAP,
+            F.floor(F.col("perplexity") / F.lit(_PPL_BIN_WIDTH)).cast("long"),
+        ).alias("ppl_bin"),
+        F.posexplode_outer("reasons").alias("pos", "reason"),
+    )
+    # a document spans one row per reason (one row when it has none); the
+    # per-document aggregates read only its first row
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
 
-    # reasons histogram (A14 adapter-count-histogram analog)
-    reasons = {
-        r["reason"]: r["n"]
-        for r in labels.select(F.explode("reasons").alias("reason"))
-        .groupBy("reason")
-        .agg(F.count(F.lit(1)).alias("n"))
+    def doc(c: str) -> F.Column:
+        return F.when(first, F.col(c))
+
+    rows = (
+        per_reason.groupingSets([[]] + [[c] for c in _GROUP_COLS], *_GROUP_COLS)
+        .agg(
+            F.grouping_id().alias("gid"),
+            F.count_if(first).alias("n"),
+            F.count("pos").alias("n_reason"),
+            F.count_if(first & F.col("keep")).alias("n_keep"),
+            F.sum(doc("n_chars")).alias("total_chars"),
+            F.avg(doc("mean_word_len")).alias("mean_word_len"),
+            F.avg(doc("symbol_char_frac")).alias("mean_symbol_frac"),
+            F.avg(doc("dup_line_frac")).alias("mean_dup_line_frac"),
+            F.avg(doc("perplexity")).alias("mean_perplexity"),
+            F.percentile(doc("perplexity"), F.lit(0.5)).alias("median_perplexity"),
+            F.sum(doc("pii_match_count")).alias("total_pii_matches"),
+            F.count_if(first & (F.col("pii_match_count") > 0)).alias("n_docs_with_pii"),
+            F.sum(doc("tox_match_count")).alias("total_tox_matches"),
+        )
         .collect()
-    }
-    # binned tables ARE the report payload (A11)
-    len_hist = {
-        int(r["bin"]): r["n"] for r in histogram(labels, "n_words", 50.0).collect()
-    }
-    ppl_hist = {
-        int(r["bin"]): r["n"]
-        for r in histogram(labels.filter(F.col("perplexity") < 20000), "perplexity", 500.0).collect()
-    }
-    lang_counts = {
-        r["lang_pred"]: r["n"]
-        for r in labels.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # NXX via the bucketed two-pass (property-tested equal to the exact
-    # window nxx): the summary is computed over the FULL labels table, so
-    # the scale-safe path — no single-task global-sort window — is the one
-    # production uses
-    n50_rows = {
-        int(r["pct"]): r["nxx"]
-        for r in n50_approx(labels, "n_words", [0.5, 0.9]).collect()
-    }
+    )
+    # an empty table yields no grand-total row
+    agg = next((r.asDict() for r in rows if r["gid"] == _GID_TOTAL), {})
+    by_set: dict[str, dict] = {c: {} for c in _GROUP_COLS}
+    for r in rows:
+        c = _SET_OF_GID.get(r["gid"])
+        if c is not None:
+            by_set[c][r[c]] = r["n_reason"] if c == "reason" else r["n"]
+
+    n_docs = agg.get("n", 0)
+    n_keep = agg.get("n_keep", 0)
+
+    # length-derived totals, N50/N90, histogram and gamma sufficient stats
+    # all come from the exact (n_words → count) rows; NULL lengths count
+    # toward none of them
+    words = sorted((w, c) for w, c in by_set["n_words"].items() if w is not None)
+    total_words = sum(w * c for w, c in words) if words else None
+    n_with_words = sum(c for _, c in words)
+    len_hist: dict[int, int] = {}
+    for w, c in words:
+        b = w // _LEN_BIN_WIDTH
+        len_hist[b] = len_hist.get(b, 0) + c
+    n50 = _nxx(words[::-1], total_words, 0.5)
+    n90 = _nxx(words[::-1], total_words, 0.9)
 
     # fits: gamma from sufficient stats (MF1); GMM on a bounded deterministic
     # sample of perplexities (MF2) — SA1-replacement sampling
+    positive = [(w, c) for w, c in words if w > 0]
+    n_pos = sum(c for _, c in positive)
     gamma_shape, gamma_scale = (
-        gamma_mle(agg["len_mean"], agg["len_meanlog"]) if agg["len_mean"] else (0.0, 0.0)
+        gamma_mle(
+            sum(w * c for w, c in positive) / n_pos,
+            math.fsum(c * math.log(w) for w, c in positive) / n_pos,
+        )
+        if n_pos
+        else (0.0, 0.0)
     )
     ppl_sample = [
         r["perplexity"]
@@ -96,8 +159,14 @@ def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int =
     ]
     gmm = gmm_1d(ppl_sample, k=2) if len(ppl_sample) >= 10 else []
 
+    lang_counts = _ordered(by_set["lang_pred"])
+    # the NULL-reason group also holds the reason-less documents (pos NULL)
+    reasons = _ordered({k: v for k, v in by_set["reason"].items() if v}, cfg.rule_names)
+    ppl_hist = dict(sorted((b, n) for b, n in by_set["ppl_bin"].items() if b is not None))
+
     keep_rate = n_keep / n_docs if n_docs else 0.0
-    pii_rate = (agg["n_docs_with_pii"] or 0) / n_docs if n_docs else 0.0
+    n_docs_with_pii = agg.get("n_docs_with_pii", 0)
+    pii_rate = n_docs_with_pii / n_docs if n_docs else 0.0
     lang_ok = sum(v for k, v in lang_counts.items() if k in cfg.allowed_langs)
     lang_mismatch = 1.0 - lang_ok / n_docs if n_docs else 0.0
 
@@ -117,25 +186,25 @@ def summarize(labels: DataFrame, cfg: QCConfig = DEFAULT_CONFIG, sample_n: int =
             "n_docs": n_docs,
             "n_keep": n_keep,
             "keep_rate": keep_rate,
-            "total_chars": agg["total_chars"],
-            "total_words": agg["total_words"],
-            "longest_doc_words": agg["longest_doc_words"],
-            "mean_words": agg["mean_words"],
-            "n50_words": n50_rows.get(50),
-            "n90_words": n50_rows.get(90),
+            "total_chars": agg.get("total_chars"),
+            "total_words": total_words,
+            "longest_doc_words": words[-1][0] if words else None,
+            "mean_words": total_words / n_with_words if words else None,
+            "n50_words": n50,
+            "n90_words": n90,
         },
         "quality": {
-            "mean_word_len": agg["mean_word_len"],
-            "mean_symbol_frac": agg["mean_symbol_frac"],
-            "mean_dup_line_frac": agg["mean_dup_line_frac"],
-            "mean_perplexity": agg["mean_perplexity"],
-            "median_perplexity": agg["median_perplexity"],
+            "mean_word_len": agg.get("mean_word_len"),
+            "mean_symbol_frac": agg.get("mean_symbol_frac"),
+            "mean_dup_line_frac": agg.get("mean_dup_line_frac"),
+            "mean_perplexity": agg.get("mean_perplexity"),
+            "median_perplexity": agg.get("median_perplexity"),
         },
         "scrub": {
-            "total_pii_matches": agg["total_pii_matches"],
-            "n_docs_with_pii": agg["n_docs_with_pii"],
+            "total_pii_matches": agg.get("total_pii_matches"),
+            "n_docs_with_pii": n_docs_with_pii,
             "pii_rate": pii_rate,
-            "total_tox_matches": agg["total_tox_matches"],
+            "total_tox_matches": agg.get("total_tox_matches"),
         },
         "langs": lang_counts,
         "reasons": reasons,

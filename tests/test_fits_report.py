@@ -74,7 +74,7 @@ def test_summarize_report(spark, corpus_path, tmp_path):
     assert s["totals"]["n_docs"] == 1000
     assert 0 < s["totals"]["keep_rate"] < 1
     assert s["totals"]["n50_words"] > 0
-    # the summary's NXX runs through the bucketed two-pass n50_approx (no
+    # the summary's NXX walks the collected (n_words → count) rows (no
     # single-task global-sort window anywhere in the production report
     # path); values must equal the exact window nxx
     from longqc_spark.operators.relational import nxx
@@ -97,6 +97,242 @@ def test_summarize_report(spark, corpus_path, tmp_path):
 
     assert json.load(open(jp))["totals"]["n_docs"] == 1000
     assert "<h1>" in open(hp).read()
+
+
+def _summarize_reference(labels, cfg=None, sample_n: int = 10_000) -> dict:
+    """The multi-query ``summarize`` the one-pass version replaced, kept as
+    the reference it must reproduce."""
+    from pyspark.sql import functions as F
+
+    from longqc_spark.config import DEFAULT_CONFIG
+    from longqc_spark.operators.relational import histogram, n50_approx
+    from longqc_spark.report import (
+        KEEP_RATE_ERROR,
+        KEEP_RATE_WARN,
+        LANG_MISMATCH_WARN,
+        PII_RATE_WARN,
+    )
+
+    cfg = cfg or DEFAULT_CONFIG
+    agg = labels.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count_if(F.col("keep")).alias("n_keep"),
+        F.sum("n_chars").alias("total_chars"),
+        F.sum("n_words").alias("total_words"),
+        F.max("n_words").alias("longest_doc_words"),
+        F.avg("n_words").alias("mean_words"),
+        F.avg("mean_word_len").alias("mean_word_len"),
+        F.avg("symbol_char_frac").alias("mean_symbol_frac"),
+        F.avg("dup_line_frac").alias("mean_dup_line_frac"),
+        F.avg("perplexity").alias("mean_perplexity"),
+        F.expr("percentile(perplexity, 0.5)").alias("median_perplexity"),
+        F.sum("pii_match_count").alias("total_pii_matches"),
+        F.count_if(F.col("pii_match_count") > 0).alias("n_docs_with_pii"),
+        F.sum("tox_match_count").alias("total_tox_matches"),
+        F.avg(F.when(F.col("n_words") > 0, F.col("n_words"))).alias("len_mean"),
+        F.avg(F.when(F.col("n_words") > 0, F.log("n_words"))).alias("len_meanlog"),
+    ).collect()[0]
+
+    n_docs = agg["n_docs"] or 0
+    n_keep = agg["n_keep"] or 0
+    reasons = {
+        r["reason"]: r["n"]
+        for r in labels.select(F.explode("reasons").alias("reason"))
+        .groupBy("reason")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    len_hist = {
+        int(r["bin"]): r["n"] for r in histogram(labels, "n_words", 50.0).collect()
+    }
+    ppl_hist = {
+        int(r["bin"]): r["n"]
+        for r in histogram(labels.filter(F.col("perplexity") < 20000), "perplexity", 500.0).collect()
+    }
+    lang_counts = {
+        r["lang_pred"]: r["n"]
+        for r in labels.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    n50_rows = {
+        int(r["pct"]): r["nxx"]
+        for r in n50_approx(labels, "n_words", [0.5, 0.9]).collect()
+    }
+    gamma_shape, gamma_scale = (
+        gamma_mle(agg["len_mean"], agg["len_meanlog"]) if agg["len_mean"] else (0.0, 0.0)
+    )
+    ppl_sample = [
+        r["perplexity"]
+        for r in labels.select("perplexity")
+        .orderBy(F.xxhash64("perplexity", F.lit(13)))
+        .limit(sample_n)
+        .collect()
+    ]
+    gmm = gmm_1d(ppl_sample, k=2) if len(ppl_sample) >= 10 else []
+
+    keep_rate = n_keep / n_docs if n_docs else 0.0
+    pii_rate = (agg["n_docs_with_pii"] or 0) / n_docs if n_docs else 0.0
+    lang_ok = sum(v for k, v in lang_counts.items() if k in cfg.allowed_langs)
+    lang_mismatch = 1.0 - lang_ok / n_docs if n_docs else 0.0
+
+    warnings: dict[str, str] = {}
+    errors: dict[str, str] = {}
+    if keep_rate < KEEP_RATE_ERROR:
+        errors["low_keep_rate"] = f"keep rate {keep_rate:.3f} < {KEEP_RATE_ERROR}"
+    elif keep_rate < KEEP_RATE_WARN:
+        warnings["low_keep_rate"] = f"keep rate {keep_rate:.3f} < {KEEP_RATE_WARN}"
+    if pii_rate > PII_RATE_WARN:
+        warnings["high_pii_rate"] = f"{pii_rate:.3f} of docs carried PII"
+    if lang_mismatch > LANG_MISMATCH_WARN:
+        warnings["high_lang_mismatch"] = f"{lang_mismatch:.3f} docs outside {cfg.allowed_langs}"
+
+    return {
+        "totals": {
+            "n_docs": n_docs,
+            "n_keep": n_keep,
+            "keep_rate": keep_rate,
+            "total_chars": agg["total_chars"],
+            "total_words": agg["total_words"],
+            "longest_doc_words": agg["longest_doc_words"],
+            "mean_words": agg["mean_words"],
+            "n50_words": n50_rows.get(50),
+            "n90_words": n50_rows.get(90),
+        },
+        "quality": {
+            "mean_word_len": agg["mean_word_len"],
+            "mean_symbol_frac": agg["mean_symbol_frac"],
+            "mean_dup_line_frac": agg["mean_dup_line_frac"],
+            "mean_perplexity": agg["mean_perplexity"],
+            "median_perplexity": agg["median_perplexity"],
+        },
+        "scrub": {
+            "total_pii_matches": agg["total_pii_matches"],
+            "n_docs_with_pii": agg["n_docs_with_pii"],
+            "pii_rate": pii_rate,
+            "total_tox_matches": agg["total_tox_matches"],
+        },
+        "langs": lang_counts,
+        "reasons": reasons,
+        "histograms": {"n_words_b50": len_hist, "perplexity_b500": ppl_hist},
+        "fits": {
+            "gamma_length": {"shape": gamma_shape, "scale": gamma_scale},
+            "gmm_perplexity": gmm,
+        },
+        "warnings": warnings,
+        "errors": errors,
+    }
+
+
+def _assert_same(ref, new, path="summary"):
+    """Integers, strings and containers equal; floats to a relative 1e-9
+    (one-pass sums add in a different order)."""
+    assert type(new) is type(ref), f"{path}: {type(ref).__name__} vs {type(new).__name__}"
+    if isinstance(ref, dict):
+        assert new.keys() == ref.keys(), path
+        for k in ref:
+            _assert_same(ref[k], new[k], f"{path}.{k}")
+    elif isinstance(ref, list):
+        assert len(new) == len(ref), path
+        for i, (a, b) in enumerate(zip(ref, new)):
+            _assert_same(a, b, f"{path}[{i}]")
+    elif isinstance(ref, float):
+        assert new == pytest.approx(ref, rel=1e-9), path
+    else:
+        assert new == ref, path
+
+
+@pytest.fixture(scope="module")
+def labels_path(spark, corpus_path, tmp_path_factory):
+    from longqc_spark.pipeline import qc_pipeline
+
+    path = str(tmp_path_factory.mktemp("report") / "labels")
+    qc_pipeline(spark.read.parquet(corpus_path)).write.parquet(path)
+    return path
+
+
+def test_summarize_matches_reference(spark, labels_path):
+    """The one-pass summarize reproduces the multi-query reference on the
+    smoke labels, an empty table, and an all-zero-length table carrying a
+    reason outside cfg.rule_names."""
+    from pyspark.sql import functions as F
+
+    from longqc_spark.report import summarize
+
+    labels = spark.read.parquet(labels_path)
+    s = summarize(labels)
+    _assert_same(_summarize_reference(labels), s)
+    assert s["totals"]["n_docs"] == 1000
+
+    empty = spark.createDataFrame([], labels.schema)
+    s = summarize(empty)
+    _assert_same(_summarize_reference(empty), s)
+    assert s["totals"]["total_words"] is None and s["totals"]["n50_words"] is None
+    assert s["fits"]["gamma_length"] == {"shape": 0.0, "scale": 0.0}
+    assert s["fits"]["gmm_perplexity"] == []
+
+    zero = labels.withColumn("n_words", F.lit(0).cast("long")).withColumn(
+        "reasons",
+        F.when(
+            F.col("n_chars") % 3 == 0, F.array_append("reasons", F.lit("custom_rule"))
+        ).otherwise(F.col("reasons")),
+    )
+    s = summarize(zero)
+    _assert_same(_summarize_reference(zero), s)
+    assert s["totals"]["n50_words"] == 0 and s["totals"]["n90_words"] == 0
+    assert s["fits"]["gamma_length"] == {"shape": 0.0, "scale": 0.0}
+    assert s["reasons"]["custom_rule"] > 0
+
+
+def test_summarize_scans_labels_at_most_twice(spark, labels_path):
+    """Scan discipline: one grouped aggregation plus one sample, so the
+    label rows are materialized at most twice and at most 5 Spark jobs run
+    (the multi-query version launched ~25)."""
+    from longqc_spark.report import summarize
+
+    labels = spark.read.parquet(labels_path)
+    n = labels.count()
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    counted = labels.mapInPandas(count_rows, labels.schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("summarize-scan-test", "summarize")
+    try:
+        s = summarize(counted)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert s["totals"]["n_docs"] == n
+    assert acc.value <= 2 * n
+    assert len(sc.statusTracker().getJobIdsForGroup("summarize-scan-test")) <= 5
+
+
+def test_report_html_independent_of_shuffle_partitions(spark, labels_path, tmp_path):
+    """The same labels render byte-identical HTML whatever the shuffle
+    partitioning: reasons follow cfg.rule_names, langs and bins are sorted."""
+    from longqc_spark.config import DEFAULT_CONFIG
+    from longqc_spark.report import summarize, write_html_report
+
+    labels = spark.read.parquet(labels_path)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    pages = []
+    try:
+        for n_parts in (2, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            s = summarize(labels)
+            path = str(tmp_path / f"r{n_parts}.html")
+            write_html_report(s, path)
+            pages.append(open(path, "rb").read())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert pages[0] == pages[1]
+    rules = [r for r in s["reasons"] if r in DEFAULT_CONFIG.rule_names]
+    assert rules == [r for r in DEFAULT_CONFIG.rule_names if r in s["reasons"]]
+    assert list(s["langs"]) == sorted(s["langs"])
+    for hist in s["histograms"].values():
+        assert list(hist) == sorted(hist)
 
 
 def test_drift_report_stable_vs_shifted(spark, corpus_path):
